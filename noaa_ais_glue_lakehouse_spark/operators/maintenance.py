@@ -17,6 +17,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from noaa_ais_glue_lakehouse_spark.sources.readers import empty_frame
+
 FOOTER_SCHEMA = (
     "path string, rg_idx int, n_rows long, n_cols int, "
     "compressed_bytes long, uncompressed_bytes long"
@@ -32,7 +34,7 @@ def parquet_footer_stats(spark: SparkSession, paths: list[str]) -> DataFrame:
     compaction and row-group-sizing decisions.
     """
     if not paths:  # a brand-new table has no files yet; audit is empty
-        return spark.createDataFrame([], FOOTER_SCHEMA)
+        return empty_frame(spark, FOOTER_SCHEMA)
     src = spark.createDataFrame([(p,) for p in paths], "path string")
     # many small footer reads per task: spread paths across tasks
     src = src.repartition(min(len(paths), 32))

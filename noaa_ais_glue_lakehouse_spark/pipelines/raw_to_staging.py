@@ -14,9 +14,13 @@ SURVEY §7.4 resolutions:
 
 Scale: the chain is a single narrow projection pipeline — no shuffle
 until the dedup groupBy, and the partitioned write reuses the dedup
-shuffle's layout when AQE is on. At 100 TB the input is a partitioned
-table root; Catalyst prunes the day window from the filter, replacing
-the reference's driver-side path enumeration.
+shuffle's layout when AQE is on. The runner scans the CSV exactly twice,
+once per sink: the quarantine write (its row count observed during the
+write, its per-day files formed by a rebalance shuffle, so the scan keeps
+its full parallelism) and the staging write (counters observed the same
+way). At 100 TB the input is a partitioned table root; Catalyst prunes
+the day window from the filter, replacing the reference's driver-side
+path enumeration.
 """
 
 from __future__ import annotations

@@ -34,6 +34,7 @@ from noaa_ais_glue_lakehouse_spark.operators.sessionize import (
     sessionize,
 )
 from noaa_ais_glue_lakehouse_spark.operators.state import prepare_seeded_union
+from noaa_ais_glue_lakehouse_spark.sources.readers import empty_frame
 from noaa_ais_glue_lakehouse_spark.sources.writers import (
     read_state_snapshot_by_date,
     write_partitioned_parquet,
@@ -102,9 +103,12 @@ def run_trajectory_window(
     - ``full``: ignore state, recompute from scratch.
 
     Writes the curated window partitioned by year/month/day (dynamic
-    overwrite → only the window's partitions are replaced) and refreshes
-    the ``end_date`` state snapshot from the *unsampled* result
-    (reference ``fact_voyage_trajectory.py:359-364``).
+    overwrite → only the window's partitions are replaced), then
+    refreshes the ``end_date`` state snapshot (reference
+    ``fact_voyage_trajectory.py:359-364``) from the window it just wrote,
+    read back rather than recomputed: sampling always keeps each entity's
+    last row per day unchanged, so the snapshot equals one built from the
+    unsampled trajectory.
     """
     from noaa_ais_glue_lakehouse_spark.schemas import STATE_SNAPSHOT_SCHEMA
 
@@ -142,19 +146,6 @@ def run_trajectory_window(
         .withColumn("day", F.dayofmonth("BaseDateTime"))
     )
 
-    # state refresh happens on the UNSAMPLED trajectory (the last point of
-    # the window must seed tomorrow even if sampling would drop it), and
-    # MERGED with the prior snapshot: an entity silent this window keeps
-    # its last-known row, otherwise its voyage counter would restart at 0
-    # on reappearance and collide with its historical voyage ids
-    new_state = latest_per_entity(curated, "MMSI", "BaseDateTime").select(
-        "MMSI", "BaseDateTime", "LAT", "LON", "VoyageID"
-    )
-    if prior_state is not None:
-        new_state = latest_per_entity(
-            new_state.unionByName(prior_state), "MMSI", "BaseDateTime"
-        )
-
     out = curated
     if sample:
         out = sample_trajectory(
@@ -169,7 +160,25 @@ def run_trajectory_window(
             out, "MMSI", "BaseDateTime", "LAT", "LON"
         )
 
-    write_partitioned_parquet(out, curated_path, ["year", "month", "day"])
+    written = write_partitioned_parquet(out, curated_path, ["year", "month", "day"])
+    # state = each entity's last row of the window, which sampling always
+    # keeps unchanged: read back exactly the partitions just published
+    # instead of running scan + sessionize + windows a second time. MERGED
+    # with the prior snapshot: an entity silent this window keeps its
+    # last-known row, otherwise its voyage counter would restart at 0 on
+    # reappearance and collide with its historical voyage ids
+    window = (
+        spark.read.schema(out.schema).option("basePath", curated_path).parquet(*written)
+        if written
+        else empty_frame(spark, out.schema)
+    )
+    new_state = latest_per_entity(window, "MMSI", "BaseDateTime").select(
+        "MMSI", "BaseDateTime", "LAT", "LON", "VoyageID"
+    )
+    if prior_state is not None:
+        new_state = latest_per_entity(
+            new_state.unionByName(prior_state), "MMSI", "BaseDateTime"
+        )
     write_state_snapshot(new_state, state_prefix, end_date)
     return out
 
@@ -186,10 +195,11 @@ def run_voyage_summary_monthly(
     ``fact_voyage_daily`` / ``fact_monthly_summary``.
 
     The month's partials are (re)written partitioned by day (dynamic
-    overwrite = embarrassingly rerunnable); the final rollup restricts
-    the *full* partials table to voyages seen this month via a left-semi
-    join on distinct keys (J3) so month-spanning voyages aggregate over
-    their complete history, then writes one row per (mmsi, voyageid)
+    overwrite = embarrassingly rerunnable). The final rollup aggregates
+    the *full* partials table once per (mmsi, voyageid), so month-spanning
+    voyages aggregate over their complete history; the same groupBy also
+    flags the voyages seen this month, and a left-semi join on their start
+    dates picks the voyages to rewrite. It then writes one row per voyage
     partitioned by voyagestartdate.
     """
     curated = spark.read.parquet(curated_path).filter(
@@ -198,33 +208,19 @@ def run_voyage_summary_monthly(
     partials = voyage_daily_partials(curated)
     write_partitioned_parquet(partials, partials_path, ["day"])
 
-    all_partials = spark.read.parquet(partials_path)
-    month_keys = (
-        all_partials.filter(F.substring("day", 1, 7) == month)
-        .select("mmsi", "voyageid")
-        .distinct()
-    )
     # The write below dynamically overwrites every voyagestartdate partition
     # this month's voyages start on. Other voyages starting on those same
     # dates (touched by earlier/later months) would be deleted with the
-    # partition unless they are recomputed too — so widen the key set to
-    # every voyage whose first partial day lands on an affected date.
-    # (A voyage's start date IS its min 'day' partial: day_first_time is
-    # bounded by that day.)
-    first_days = all_partials.groupBy("mmsi", "voyageid").agg(
-        F.min("day").alias("_first_day")
+    # partition unless they are recomputed too — so keep every voyage that
+    # starts on the start date of a voyage seen this month.
+    rolled = monthly_voyage_summary(
+        spark.read.schema(partials.schema).parquet(partials_path),
+        F.bool_or(F.substring("day", 1, 7) == month).alias("_seen"),
     )
-    affected_dates = (
-        first_days.join(month_keys, ["mmsi", "voyageid"], "left_semi")
-        .select("_first_day")
-        .distinct()
-    )
-    keys = (
-        first_days.join(affected_dates, "_first_day", "left_semi")
-        .select("mmsi", "voyageid")
-    )
-    relevant = all_partials.join(keys, ["mmsi", "voyageid"], "left_semi")
-    summary = monthly_voyage_summary(relevant)
+    affected = rolled.filter("_seen").select(F.col("voyagestartdate").alias("_start"))
+    summary = rolled.join(
+        affected, F.col("voyagestartdate") == F.col("_start"), "left_semi"
+    ).drop("_seen")
     write_partitioned_parquet(summary, summary_path, ["voyagestartdate"])
     return summary
 
@@ -260,11 +256,12 @@ def voyage_daily_partials(df: DataFrame) -> DataFrame:
     )
 
 
-def monthly_voyage_summary(partials: DataFrame) -> DataFrame:
+def monthly_voyage_summary(partials: DataFrame, *extra_aggs) -> DataFrame:
     """T5/A2-A4 — roll daily partials up to one row per (mmsi, voyageid).
 
     Sum-of-sums / min-of-mins decomposition plus derived metrics,
     mirroring ``transformations/facts/fact_monthly_summary.py:79-136``.
+    ``extra_aggs`` ride the same groupBy and trail the output columns.
     """
     rolled = partials.groupBy("mmsi", "voyageid").agg(
         F.min("day_first_time").alias("voyagestart"),
@@ -274,6 +271,7 @@ def monthly_voyage_summary(partials: DataFrame) -> DataFrame:
         F.sum("day_pointcount").alias("pointcount"),
         F.sum("day_sum_lat").alias("sum_lat"),
         F.sum("day_sum_lon").alias("sum_lon"),
+        *extra_aggs,
     )
     dur_h = (
         F.unix_timestamp("voyageend") - F.unix_timestamp("voyagestart")
@@ -292,4 +290,5 @@ def monthly_voyage_summary(partials: DataFrame) -> DataFrame:
         F.round(F.col("sum_lon") / F.col("pointcount"), 6).alias("avglon"),
         "pointcount",
         F.to_date("voyagestart").alias("voyagestartdate"),
+        *rolled.columns[9:],  # extra_aggs: after the 2 keys and 7 rollups
     )

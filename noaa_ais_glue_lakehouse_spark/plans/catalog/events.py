@@ -171,7 +171,7 @@ def q11_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     + """
     SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
            MIN(ts) AS session_start, MAX(ts) AS session_end,
-           ROUND((epoch_us(MAX(ts)) - epoch_us(MIN(ts)))/3600000000.0, 6) AS duration_hours,
+           ((epoch_us(MAX(ts)) - epoch_us(MIN(ts)) + 1800) // 3600) / 1000000.0 AS duration_hours,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS DOUBLE)/100.0 AS sum_value,
            ROUND(CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS DOUBLE)/COUNT(*)/100.0, 6) AS avg_value
@@ -182,6 +182,8 @@ def q12_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 — daily partials (A1) re-aggregated to per-session finals (A2) with
     derived metrics (A4): the reference's voyage_summary two-level rollup.
     The two-level decomposition must equal the single-level oracle.
+    ``duration_hours`` rounds half up to 1e-6 h in exact integer math, so
+    engines cannot disagree on a tie.
     """
     ev = load(spark, sf_dir, "events")
     s = sessionize(
@@ -204,8 +206,9 @@ def q12_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "session_id",
         "session_start",
         "session_end",
-        F.round(
-            (F.unix_micros("session_end") - F.unix_micros("session_start")) / 3.6e9, 6
+        (
+            F.expr("(unix_micros(session_end) - unix_micros(session_start) + 1800) div 3600")
+            / 1e6
         ).alias("duration_hours"),
         "n_events",
         (F.col("sum_cents").cast("double") / 100.0).alias("sum_value"),

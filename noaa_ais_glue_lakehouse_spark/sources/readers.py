@@ -133,4 +133,19 @@ def read_state_snapshot(
         df.head(1)
         return df
     except Exception:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A zero-row DataFrame with exactly ``schema`` (nullability included)
+    and zero partitions. On a classic session ``createDataFrame([])``
+    parallelizes the empty list into ``defaultParallelism`` Python-RDD
+    partitions, so any plan over it starts Python workers for nothing; an
+    empty RDD has no partitions, hence no tasks. Spark Connect has no
+    SparkContext, and there ``createDataFrame([])`` is a local relation.
+    """
+    try:
+        rows = spark.sparkContext.emptyRDD()
+    except (AttributeError, NotImplementedError):  # Spark Connect
+        rows = []
+    return spark.createDataFrame(rows, schema)

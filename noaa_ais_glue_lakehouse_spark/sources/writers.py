@@ -36,41 +36,52 @@ def bounded_count(df: DataFrame, threshold: int) -> int:
     return df.limit(threshold + 1).count()
 
 
-def _swap_staged_partitions(
-    spark: SparkSession, staging: str, path: str, partition_cols: list[str]
-) -> None:
-    """Publish a staged partitioned-parquet write: one filesystem rename
-    per staged partition directory into the table root (replacing any
-    existing version of that partition), then drop the emptied staging
-    tree. Each rename is metadata-only; a crash between renames leaves
-    every partition either fully-old or fully-new, never mixed, and the
-    dot-prefixed staging residue is invisible to parquet readers."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(path).getFileSystem(conf)
-    staging_p = fs.makeQualified(HPath(staging))
-    root_p = fs.makeQualified(HPath(path))
-    # walk exactly len(partition_cols) directory levels below staging —
-    # the ACTUAL on-disk partition dir names (Hive-escaped values come
-    # back verbatim; no hand-built col=value fragments)
-    levels = [staging_p]
+def _write_staged(
+    df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet", **options
+) -> list[str]:
+    """Stage-then-swap partitioned write with dynamic-partition-overwrite
+    semantics (only partitions present in ``df`` are replaced), whatever
+    the session's ``partitionOverwriteMode``.
+
+    The write job — the long, failure-prone phase — lands in a hidden
+    ``.staging-<token>`` directory under the table root; only after it
+    succeeds does each staged partition directory replace its published
+    twin with one metadata-only rename. A crash during the write leaves
+    every published partition intact, a crash between renames leaves each
+    partition fully-old or fully-new, and the dot-prefixed residue is
+    invisible to readers. A write of no rows publishes nothing and removes
+    the table root if it created it. Returns the published partition
+    directories.
+    """
+    import uuid
+
+    spark = df.sparkSession
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(HPath(path)).toString()
+    existed = fs.exists(HPath(root))
+    staging = f"{root}/.staging-{uuid.uuid4().hex}"
+    df.write.mode("overwrite").options(**options).partitionBy(*partition_cols).format(
+        fmt
+    ).save(staging)
+    # walk one directory level per partition column below staging — the
+    # ACTUAL on-disk partition dir names (Hive-escaped values come back
+    # verbatim; no hand-built col=value fragments)
+    staged = [HPath(staging)]
     for _ in partition_cols:
-        nxt = []
-        for d in levels:
-            for st in fs.listStatus(d):
-                if st.isDirectory():
-                    nxt.append(st.getPath())
-        levels = nxt
-    staging_str = staging_p.toString()
-    for staged_dir in levels:
-        rel = staged_dir.toString()[len(staging_str) + 1 :]
-        dest = HPath(f"{root_p.toString()}/{rel}")
+        staged = [st.getPath() for d in staged for st in fs.listStatus(d) if st.isDirectory()]
+    published = []
+    for src in staged:
+        dest = HPath(root + src.toString()[len(staging) :])
         if fs.exists(dest):
             fs.delete(dest, True)
         fs.mkdirs(dest.getParent())
-        fs.rename(staged_dir, dest)
-    fs.delete(staging_p, True)  # _SUCCESS marker + emptied tree
+        fs.rename(src, dest)
+        published.append(dest.toString())
+    fs.delete(HPath(staging), True)  # _SUCCESS marker + emptied tree
+    if not published and not existed:
+        fs.delete(HPath(root), True)
+    return published
 
 
 def write_partitioned_parquet(
@@ -78,34 +89,27 @@ def write_partitioned_parquet(
     path: str,
     partition_cols: list[str],
     mode: str = "overwrite",
-) -> None:
-    """S4 — partitioned parquet sink with dynamic-partition-overwrite
-    SEMANTICS (only partitions present in ``df`` are replaced), made
-    CRASH-SAFE via the same stage-then-swap as the S5 window sink.
+) -> list[str]:
+    """S4 — partitioned parquet sink: dynamic partition overwrite made
+    crash-safe by stage-then-swap (``_write_staged``). Returns the
+    published partition directories, so a caller can read back exactly
+    what it wrote.
 
     Reference: ``pipelines/raw_to_staging.py:172-178`` +
     ``partitionOverwriteMode=dynamic`` at ``:23``. Spark's own dynamic
     overwrite deletes each replaced partition before committing its
     replacement, so a mid-commit crash can lose partitions that were
-    fine before the job started; here the write job — the long,
-    failure-prone phase — lands in a hidden ``.staging-<token>``
-    directory and published partitions are touched only by the
-    near-instant per-partition rename swap afterwards (pinned by a
-    kill-mid-write test). Non-overwrite modes pass straight through:
-    an append commit never deletes published data, so the v1
+    fine before the job started (pinned by a kill-mid-write test).
+    Non-overwrite modes pass straight through (and return ``[]``): an
+    append commit never deletes published data, so the v1
     FileOutputCommitter's task-file publish is already safe.
     """
     if mode != "overwrite" or not partition_cols:
         spark = df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-        return
-    import uuid
-
-    spark = df.sparkSession
-    staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    _swap_staged_partitions(spark, staging, path, partition_cols)
+        return []
+    return _write_staged(df, path, partition_cols)
 
 
 def write_window_overwrite(
@@ -113,72 +117,54 @@ def write_window_overwrite(
     path: str,
     partition_cols: list[str],
     window_predicate,
-) -> None:
-    """S5 — overwrite only the partitions inside the window predicate,
-    CRASH-SAFE via stage-then-swap.
+) -> list[str]:
+    """S5 — overwrite only the partitions inside the window predicate
+    (a boolean Column), crash-safe via stage-then-swap.
 
     The filter guarantees no row outside the window exists in the input,
     so only window partitions can be replaced — the correct form of the
     reference's no-op ``replaceWhere`` on a parquet writer
     (``fact_voyage_trajectory.py:354-355``; SURVEY §4 "window-scoped
-    overwrite"). ``window_predicate`` is a boolean Column.
-
-    Two-phase commit (the JSONL sink's stage-then-publish pattern applied
-    to parquet): the WRITE JOB — the long, failure-prone phase — lands in
-    a hidden ``.staging-<token>`` directory and never touches published
-    data; only after it succeeds does each staged partition directory
-    swap into place with a filesystem rename. A crash any time during the
-    write leaves every published partition intact and readable (pinned by
-    a kill-mid-write test). The swap phase itself is one rename per
-    partition — metadata-only and near-instant, the parquet-native
-    approximation of Delta's transactional ``replaceWhere`` (SURVEY
-    §7.3's named upgrade path); a crash between renames leaves each
-    partition either fully-old or fully-new, never mixed, and the
-    leftover staging directory (dot-prefixed, ignored by parquet
-    readers) is re-swappable or deletable on re-run.
+    overwrite"). The per-partition rename swap is the parquet-native
+    approximation of Delta's transactional ``replaceWhere`` (SURVEY §7.3's
+    named upgrade path); a leftover staging directory is re-swappable or
+    deletable on re-run.
     """
-    import uuid
-
-    spark = df.sparkSession
-    staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
-    df.filter(window_predicate).write.mode("overwrite").partitionBy(
-        *partition_cols
-    ).parquet(staging)
-    _swap_staged_partitions(spark, staging, path, partition_cols)
+    return _write_staged(df.filter(window_predicate), path, partition_cols)
 
 
 def write_quarantine(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
-    small_threshold: int = 100_000,
 ) -> int:
     """S6 — quarantine sink for rejected rows; returns rows written.
 
     Partitioned by the row's own year/month/day (when present) rather
-    than a single first()-derived path. Small spills are coalesced to one
-    file to avoid small-file litter (reference ``coalesce(1)`` rule,
-    ``utils/common_functions_raw.py:73-94``); large spills keep their
-    parallelism. CSV with header, matching the reference's format.
+    than a single first()-derived path, and published with the same
+    stage-then-swap as the parquet sinks, so a rerun replaces exactly
+    the days it wrote. A ``rebalance`` hint on the partition columns
+    gives each day one file (the reference's small-file rule,
+    ``utils/common_functions_raw.py:73-94``, without its ``coalesce(1)``
+    that pulled the whole upstream scan into one task), and the exact
+    row count rides the write job via ``observe()`` — no pre-count
+    pass. An empty quarantine writes nothing. Without partition columns
+    the write is a plain overwrite. CSV with header, matching the
+    reference's format.
     """
     from pyspark.sql import Observation
 
     parts = [c for c in (partition_cols or ["year", "month", "day"]) if c in df.columns]
-    n = bounded_count(df, small_threshold)
-    if n == 0:
-        return 0
-    # dynamic overwrite here too — without it, a vanilla session's first
-    # quarantine write would truncate ALL prior days' quarantined rows
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out = df.coalesce(1) if n <= small_threshold else df
-    # exact row count rides the write job via observe() (the bounded count
-    # above only decides the coalesce and may stop at threshold+1)
     obs = Observation("quarantine")
-    out = out.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    writer = out.write.mode("overwrite").option("header", True)
+    # observe ABOVE the rebalance: when the shuffle comes back empty, AQE
+    # replaces the subtree under it, and with it any metrics collected there
+    out = (df.hint("rebalance", *parts) if parts else df).observe(
+        obs, F.count(F.lit(1)).alias("n_rows")
+    )
     if parts:
-        writer = writer.partitionBy(*parts)
-    writer.csv(path)
+        _write_staged(out, path, parts, "csv", header=True)
+    else:
+        out.write.mode("overwrite").option("header", True).csv(path)
     return obs.get["n_rows"]
 
 
@@ -197,15 +183,18 @@ def write_state_snapshot(df: DataFrame, prefix: str, date_str: str) -> None:
 def read_state_snapshot_by_date(
     spark: SparkSession, prefix: str, date_str: str, schema: T.StructType
 ) -> DataFrame:
-    """S8 — dated snapshot source with empty-DataFrame fallback (first
-    run / missing day). Reference: ``utils/state_io.py:14-29``.
+    """S8 — dated snapshot source with an empty fallback (first run /
+    missing day). Reference: ``utils/state_io.py:14-29``. A missing or
+    empty snapshot directory already fails the read's analysis, so no
+    probe job runs.
     """
+    from noaa_ais_glue_lakehouse_spark.sources.readers import empty_frame
+
     path = f"{prefix.rstrip('/')}/by_date={date_str}/"
     try:
         raw = spark.read.parquet(path)
-        raw.head(1)  # existence probe only
     except Exception:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     # cast-by-name to the declared schema rather than an enforced read:
     # an enforced read THROWS on physical-type drift (e.g. an INT64 MMSI
     # written by a caller with wider ids vs the INT32 declaration), and
