@@ -431,12 +431,6 @@ def jaccard_pairs_prefix_filter(
         F.col("_rank").alias("_rb"),
         "_tok",
     )
-    # Same AQE trap as _band_pairs: candidate rows are ~16 bytes, so the
-    # post-distinct exchange would coalesce to a couple of partitions by
-    # byte size and the compute-bound array_intersect verify would run
-    # near-serial (measured 149 s -> ~8 s at sf0.1 on the dup-heavy
-    # corpus). A user-specified numeric repartition is exempt.
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     # PPJoin positional filter: a shared prefix token at ranks (ra, rb)
     # caps the achievable overlap at 1 + min(na-ra, nb-rb); pairs whose
     # cap is below the required overlap α = ⌈t/(1+t)·(na+nb)⌉ can't
@@ -462,55 +456,30 @@ def jaccard_pairs_prefix_filter(
         )
         .select("id_a", "id_b")
         .distinct()
-        .repartition(parallelism, "id_a", "id_b")
     )
     # 128-bit occupancy masks of each set, for the exactness-preserving
     # verify prefilter (see _mask_bound_filter): the shingles here are
     # STRINGS (the exactness contract forbids intersecting hashes), so
     # the mask hashes each shingle once per DOC — the per-PAIR intersect
     # still compares the strings themselves.
-    masked = sets.withColumn(
-        "_mlo",
+    masked = sets.select(
+        "_id",
+        "_sh",
+        "_n",
         F.expr(
             "aggregate(_sh, 0L, (m, x) ->"
             " CASE WHEN pmod(xxhash64(x), 128) < 64"
             " THEN m | shiftleft(1L, CAST(pmod(xxhash64(x), 128) AS INT))"
             " ELSE m END)"
-        ),
-    ).withColumn(
-        "_mhi",
+        ).alias("_mlo"),
         F.expr(
             "aggregate(_sh, 0L, (m, x) ->"
             " CASE WHEN pmod(xxhash64(x), 128) >= 64"
             " THEN m | shiftleft(1L, CAST(pmod(xxhash64(x), 128) - 64 AS INT))"
             " ELSE m END)"
-        ),
+        ).alias("_mhi"),
     )
-    sa = masked.select(
-        F.col("_id").alias("id_a"),
-        F.col("_sh").alias("_sha"),
-        F.col("_n").alias("_na"),
-        F.col("_mlo").alias("_mloa"),
-        F.col("_mhi").alias("_mhia"),
-    )
-    sb = masked.select(
-        F.col("_id").alias("id_b"),
-        F.col("_sh").alias("_shb"),
-        F.col("_n").alias("_nb"),
-        F.col("_mlo").alias("_mlob"),
-        F.col("_mhi").alias("_mhib"),
-    )
-    verify = _mask_bound_filter(
-        cands.join(sa, "id_a").join(sb, "id_b"), threshold
-    )
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.col("_na") + F.col("_nb") - inter
-    jacc = F.when(
-        union > 0, inter.cast("double") / union.cast("double")
-    ).otherwise(F.lit(0.0))
-    return verify.select(
-        "id_a", "id_b", F.round(jacc, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_verify(cands, masked, threshold)
 
 
 def band_geometry(threshold: float) -> tuple[int, int]:
@@ -652,39 +621,25 @@ def _mask_bound_filter(out: DataFrame, threshold: float) -> DataFrame:
     return out.filter(F.round(jacc_ub, 6) >= threshold)
 
 
-def _band_pairs(
-    feats: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """Banded-LSH candidate pairs (id_a < id_b, exactly once) from a
-    per-document signature index (``_h0..`` columns)."""
-    r = num_hashes // bands
-    # Band hashes as FLAT columns (not an array): every band of every doc
-    # is needed in the join condition below, and flat primitive columns
-    # keep the whole condition inside whole-stage codegen.
-    band_hash = [
-        F.xxhash64(
-            F.concat_ws(
-                ",", *[F.col(f"_h{i * r + j}").cast("string") for j in range(r)]
-            )
-        ).alias(f"_b{i}")
-        for i in range(bands)
-    ]
-    banded_docs = feats.select(F.col(id_col), *band_hash)
-    banded = banded_docs.select(
-        id_col,
-        *[f"_b{i}" for i in range(bands)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"), F.col(f"_b{i}").alias("band_hash")
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, *[f"_b{i}" for i in range(bands)], "band.band_idx", "band.band_hash")
+def band_pairs(keyed: DataFrame, id_col: str, key_cols: list[F.Column]) -> DataFrame:
+    """Banded-LSH candidate pairs ``(id_a, id_b)``, id_a < id_b, each
+    unordered pair exactly once — the one self-join behind every banded
+    family (minhash bands, hyperplane tables, simhash blocks).
 
+    ``key_cols`` holds one key expression per band over ``keyed``, all of
+    one type; two rows are candidates iff some band's keys are equal.
+    Keys are only compared for equality, so a caller may compress a band
+    to a 64-bit hash: a collision only adds a candidate, which every
+    caller's exact verify then rejects.
+    """
+    flat = [f"_k{i}" for i in range(len(key_cols))]
+    # Band keys stay FLAT columns (not an array) next to the exploded
+    # (band_idx, key) row: every band of every doc is needed in the join
+    # condition below, and flat primitive columns keep the whole
+    # condition inside whole-stage codegen.
+    banded = keyed.select(
+        F.col(id_col), *[k.alias(f) for k, f in zip(key_cols, flat)]
+    ).select(id_col, *flat, F.posexplode(F.array(*flat)).alias("band_idx", "key"))
     a = banded.alias("a")
     b = banded.alias("b")
     # Cross-band dedup WITHOUT a shuffle: a pair colliding in k bands
@@ -695,23 +650,77 @@ def _band_pairs(
     # bands-1-term boolean filter evaluated inside the join.
     cond = (
         (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
+        & (F.col("a.key") == F.col("b.key"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     )
-    for j in range(bands - 1):
+    for j, k in enumerate(flat[:-1]):
         cond = cond & (
-            (F.col("a.band_idx") <= F.lit(j)) | (F.col(f"a._b{j}") != F.col(f"b._b{j}"))
+            (F.col("a.band_idx") <= F.lit(j)) | (F.col(f"a.{k}") != F.col(f"b.{k}"))
         )
-    pairs = a.join(b, cond).select(
+    return a.join(b, cond).select(
         F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
+
+
+def _minhash_band_keys(num_hashes: int, bands: int) -> list[F.Column]:
+    """One 64-bit key per band: ``xxhash64`` straight over the band's r
+    signature longs (``_h0..``) — no string building per band."""
+    if num_hashes % bands != 0:
+        raise ValueError("num_hashes must be divisible by bands")
+    r = num_hashes // bands
+    return [
+        F.xxhash64(*[F.col(f"_h{i * r + j}") for j in range(r)])
+        for i in range(bands)
+    ]
+
+
+def _jaccard_verify(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs → ``(id_a, id_b, jaccard)`` with
+    ``round(jaccard, 6) >= threshold``.
+
+    ``cands`` holds ``(id_a, id_b)``; ``sets`` holds ``(id, _sh, _n,
+    _mlo, _mhi)``, id first: each document's shingle set, its size and
+    its 128-bit occupancy mask. Both sides re-attach their set by
+    equi-join, so the work is |candidates|, never |corpus|². Filters run
+    cheapest first:
+
+    1. integer size prefilter ``least·10 >= greatest·int(10t)``
+       (J ≥ t forces min/max ≥ t ≥ int(10t)/10; the q383/q399 oracles
+       mirror it);
+    2. the occupancy-mask upper bound (:func:`_mask_bound_filter`);
+    3. the exact ``array_intersect``;
+    4. ``round(J, 6) >= t``.
+    """
     # Explicit numeric repartition on the pair key: pair rows are ~16
     # bytes, so AQE would coalesce the exchange to a couple of partitions
-    # by byte size — and the downstream exact-Jaccard verify
-    # (compute-bound, not byte-bound) would inherit that near-serial
-    # layout. A user-specified repartition is exempt from AQE coalescing.
-    parallelism = feats.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(parallelism, "id_a", "id_b")
+    # by byte size and the compute-bound verify would run near-serial
+    # (measured 149 s -> ~8 s at sf0.1 on the dup-heavy corpus). A
+    # user-specified repartition is exempt from AQE coalescing.
+    parallelism = cands.sparkSession.sparkContext.defaultParallelism
+    id_col = sets.columns[0]
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}{s}") for c in ("_sh", "_n", "_mlo", "_mhi")],
+        )
+
+    out = (
+        cands.repartition(parallelism, "id_a", "id_b")
+        .join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+    )
+    na, nb = F.col("_na"), F.col("_nb")
+    out = out.filter(F.least(na, nb) * 10 >= F.greatest(na, nb) * int(threshold * 10))
+    out = _mask_bound_filter(out, threshold)
+    inter = F.size(F.array_intersect("_sha", "_shb"))
+    union = na + nb - inter
+    jacc = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
+        F.lit(0.0)
+    )
+    return out.select(
+        "id_a", "id_b", F.round(jacc, 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_candidates(
@@ -743,14 +752,13 @@ def minhash_lsh_candidates(
     LRU-evictable (MEMORY_AND_DISK), so repeated invocations in one
     session self-limit. Set False to keep the plan fully lazy.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
+    keys = _minhash_band_keys(num_hashes, bands)
     feats = _minhash_index(
         df, id_col, text_col, num_hashes, use_char_ngrams, ngram_n, with_sets=False
     )
     if materialize_index:
         feats = query_scoped_cache(feats)
-    return _band_pairs(feats, id_col, num_hashes, bands)
+    return band_pairs(feats, id_col, keys)
 
 
 def minhash_near_duplicates(
@@ -778,8 +786,8 @@ def minhash_near_duplicates(
     32-term equality chain pushed the verify stage out of whole-stage
     codegen (hugeMethodLimit) into interpreted execution — 6.5 s → 115 s
     at sf0.1 for a recall delta of 53 pairs in 2.96M. The exact
-    size-prefilter + array_intersect below stays comfortably inside
-    codegen.
+    size-prefilter + array_intersect of :func:`_jaccard_verify` stays
+    comfortably inside codegen.
 
     Verify runs over xxhash64'd shingles: array_intersect on longs skips
     per-element string hashing/equality — measured 18.7s → 11.2s at
@@ -824,54 +832,14 @@ def minhash_near_duplicates(
         num_hashes, bands = band_geometry(threshold)
     if num_hashes is None or bands is None:
         raise ValueError("pass both num_hashes and bands, or neither")
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
+    keys = _minhash_band_keys(num_hashes, bands)
     feats = _minhash_index(
         df, id_col, text_col, num_hashes, use_char_ngrams, ngram_n, with_sets=True
     )
     if materialize_index:
         feats = query_scoped_cache(feats)
-    cands = _band_pairs(feats, id_col, num_hashes, bands)
     sets = feats.select(F.col(id_col), "_sh", "_n", "_mlo", "_mhi")
-    out = (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_sh").alias("_sha"),
-                F.col("_n").alias("_na"),
-                F.col("_mlo").alias("_mloa"),
-                F.col("_mhi").alias("_mhia"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_sh").alias("_shb"),
-                F.col("_n").alias("_nb"),
-                F.col("_mlo").alias("_mlob"),
-                F.col("_mhi").alias("_mhib"),
-            ),
-            "id_b",
-        )
-    )
-    # Exactness-preserving size prefilter before the set intersection:
-    # J(A,B) ≥ t forces t ≤ |A|/|B| ≤ 1/t, so size-mismatched candidates
-    # are rejected without paying for array_intersect.
-    na, nb = F.col("_na"), F.col("_nb")
-    out = out.filter(F.least(na, nb) >= F.greatest(na, nb) * F.lit(threshold))
-    # 128-bit occupancy-mask bound: rejects most remaining sub-threshold
-    # pairs for a few bit-ops each (round 11; see _mask_bound_filter for
-    # the exactness argument)
-    out = _mask_bound_filter(out, threshold)
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = na + nb - inter
-    jacc = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    return out.select(
-        "id_a", "id_b", F.round(jacc, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_verify(band_pairs(feats, id_col, keys), sets, threshold)
 
 
 def _portable_simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -962,49 +930,25 @@ def simhash_near_duplicates(
         sigs = query_scoped_cache(sigs)
     block_bits = 64 // n_blocks
     mask = (1 << block_bits) - 1
-    blocked = sigs.select(
-        id_col,
-        "_simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block_idx"),
-                        F.shiftright("_simhash", i * block_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("block_val"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("blk"),
-    ).select(id_col, "_simhash", "blk.block_idx", "blk.block_val")
-
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    # first-collision-block dedup (same trick as the minhash bands): a
-    # pair sharing k blocks is emitted only from the earliest shared
-    # block, so no distinct over the k-fold join output is needed. The
-    # earlier-block values derive from the simhash both sides already
-    # carry — plain shift/mask codegen terms.
-    cond = (
-        (F.col("a.block_idx") == F.col("b.block_idx"))
-        & (F.col("a.block_val") == F.col("b.block_val"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    # The simhash rides in a struct with the id: band_pairs orders the
+    # structs by their (unique) id first, and the Hamming check reads
+    # both simhashes off the pair. Re-attaching them by two joins would
+    # scan the cached index twice more (measured +2.6 s per call at sf0.1
+    # on 4 cores, 3.7 -> 6.3 s).
+    doc = sigs.select(F.struct(id_col, "_simhash").alias("_doc"))
+    blocks = [
+        F.shiftright("_doc._simhash", i * block_bits).bitwiseAND(F.lit(mask))
+        for i in range(n_blocks)
+    ]
+    return (
+        band_pairs(doc, "_doc", blocks)
+        .select(
+            F.col(f"id_a.{id_col}").alias("id_a"),
+            F.col(f"id_b.{id_col}").alias("id_b"),
+            hamming64(F.col("id_a._simhash"), F.col("id_b._simhash")).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
     )
-    for j in range(n_blocks - 1):
-        blk_a = F.shiftright("a._simhash", j * block_bits).bitwiseAND(F.lit(mask))
-        blk_b = F.shiftright("b._simhash", j * block_bits).bitwiseAND(F.lit(mask))
-        cond = cond & ((F.col("a.block_idx") <= F.lit(j)) | (blk_a != blk_b))
-    cands = a.join(b, cond).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a._simhash").alias("_ha"),
-        F.col("b._simhash").alias("_hb"),
-    )
-    return cands.select(
-        "id_a", "id_b", hamming64(F.col("_ha"), F.col("_hb")).alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def drop_boilerplate_segments(
@@ -1301,6 +1245,38 @@ def minhash_portable_slot_consts(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
+def _portable_minhash_index(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int
+) -> DataFrame:
+    """Cached per-document index of the portable minhash family, in ONE
+    spread shingle pass: signature slots ``_h0..`` plus the 60-bit md5
+    shingle set ``_sh``, its size ``_n`` and its occupancy mask
+    ``_mlo``/``_mhi``. Every portable consumer (band join, both verify
+    sides, the audits) reads this one relation, so the md5 pass runs
+    once per query however many plan references it feeds."""
+    p = MINHASH_PORTABLE_P
+    exploded = (
+        _spread(df.select(F.col(id_col), F.col(text_col)))
+        .select(F.col(id_col), F.explode(_shingle_expr(text_col, False, 0)).alias("_s"))
+        .select(
+            F.col(id_col),
+            F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
+            .cast("long")
+            .alias("_h60"),
+        )
+        .withColumn("_hp", F.col("_h60") % p)
+    )
+    aggs = [
+        F.min((F.col("_hp") * F.lit(a) + F.lit(b)) % p).alias(f"_h{i}")
+        for i, (a, b) in enumerate(minhash_portable_slot_consts(num_hashes))
+    ]
+    aggs.append(F.collect_set(F.col("_h60")).alias("_sh"))
+    aggs.extend(_shingle_mask_aggs("_h60"))
+    return query_scoped_cache(
+        exploded.groupBy(id_col).agg(*aggs).withColumn("_n", F.size("_sh"))
+    )
+
+
 def minhash_near_duplicates_portable(
     df: DataFrame,
     id_col: str,
@@ -1321,8 +1297,8 @@ def minhash_near_duplicates_portable(
     MIN((a_i·(h mod P) + b_i) mod P) with P = 2³¹−1 and the fixed
     :func:`minhash_portable_slot_consts` family — every product stays
     under 2⁶² so neither engine can overflow int64. Banding and the
-    first-colliding-band pair dedup reuse :func:`_band_pairs`
-    unchanged: band hashes are engine-INTERNAL (a band-hash collision
+    first-colliding-band pair dedup reuse :func:`band_pairs`
+    unchanged: band keys are engine-INTERNAL (a band-hash collision
     only adds a candidate the exact verify then rejects), so xxhash64
     band compaction keeps codegen speed without costing portability.
     The verify intersects the 60-bit md5 shingle sets — the same values
@@ -1336,71 +1312,10 @@ def minhash_near_duplicates_portable(
     Scale shape is q27's exactly: one spread shingle pass, one
     per-doc aggregate (map-side combinable mins + collect_set), banded
     equi-join candidates, |candidates|-bounded verify."""
-    p = MINHASH_PORTABLE_P
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-    shingle = _shingle_expr(text_col, False, 0)
-    exploded = (
-        _spread(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(shingle).alias("_s"))
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("_h60"),
-        )
-        .withColumn("_hp", F.col("_h60") % p)
-    )
-    aggs = [
-        F.min((F.col("_hp") * F.lit(a) + F.lit(b)) % p).alias(f"_h{i}")
-        for i, (a, b) in enumerate(minhash_portable_slot_consts(num_hashes))
-    ]
-    aggs.append(F.collect_set(F.col("_h60")).alias("_sh"))
-    aggs.extend(_shingle_mask_aggs("_h60"))
-    feats = query_scoped_cache(
-        exploded.groupBy(id_col).agg(*aggs).withColumn("_n", F.size("_sh"))
-    )
-    cands = _band_pairs(feats, id_col, num_hashes, bands)
+    keys = _minhash_band_keys(num_hashes, bands)
+    feats = _portable_minhash_index(df, id_col, text_col, num_hashes)
     sets = feats.select(F.col(id_col), "_sh", "_n", "_mlo", "_mhi")
-    out = (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_sh").alias("_sha"),
-                F.col("_n").alias("_na"),
-                F.col("_mlo").alias("_mloa"),
-                F.col("_mhi").alias("_mhia"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_sh").alias("_shb"),
-                F.col("_n").alias("_nb"),
-                F.col("_mlo").alias("_mlob"),
-                F.col("_mhi").alias("_mhib"),
-            ),
-            "id_b",
-        )
-    )
-    # integer cross-multiplied size prefilter (t = 0.8 -> 5*min >= 4*max)
-    na, nb = F.col("_na"), F.col("_nb")
-    out = out.filter(
-        F.least(na, nb) * 10 >= F.greatest(na, nb) * int(threshold * 10)
-    )
-    # 128-bit occupancy-mask bound (round 11, exactness-preserving —
-    # see _mask_bound_filter; the md5 shingle hashes feed pmod the same
-    # way the xxhash64 family does, so the oracle needs no change)
-    out = _mask_bound_filter(out, threshold)
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = na + nb - inter
-    jacc = F.when(
-        union > 0, inter.cast("double") / union.cast("double")
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "id_a", "id_b", F.round(jacc, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_verify(band_pairs(feats, id_col, keys), sets, threshold)
 
 
 def minhash_contamination_portable(
@@ -1432,106 +1347,27 @@ def minhash_contamination_portable(
 
     Returns ``(id_col, n_bench_matches, max_jaccard)``.
     """
-    p = MINHASH_PORTABLE_P
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-    shingle = _shingle_expr(text_col, False, 0)
-    exploded = (
-        _spread(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), F.explode(shingle).alias("_s"))
-        .select(
-            F.col(id_col),
-            F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("_h60"),
-        )
-        .withColumn("_hp", F.col("_h60") % p)
-    )
-    aggs = [
-        F.min((F.col("_hp") * F.lit(a) + F.lit(b)) % p).alias(f"_h{i}")
-        for i, (a, b) in enumerate(minhash_portable_slot_consts(num_hashes))
-    ]
-    aggs.append(F.collect_set(F.col("_h60")).alias("_sh"))
-    aggs.extend(_shingle_mask_aggs("_h60"))
-    # the index feeds FOUR references (bench band, corpus band, both
-    # verify sides) — uncached, the md5-shingle aggregation re-ran per
-    # reference (round 11; same treatment as minhash_near_duplicates'
-    # materialize_index, via the bounded registry)
-    feats = query_scoped_cache(
-        exploded.groupBy(id_col).agg(*aggs).withColumn("_n", F.size("_sh"))
-    )
-    bench = feats.filter(bench_pred)
-    corpus = feats.filter(~bench_pred)
+    keys = _minhash_band_keys(num_hashes, bands)
+    feats = _portable_minhash_index(df, id_col, text_col, num_hashes)
 
     def banded(side: DataFrame, tag: str) -> DataFrame:
         return side.select(
             F.col(id_col).alias(f"id_{tag}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.concat_ws(
-                                ":",
-                                *[
-                                    F.col(f"_h{bi * r + j}").cast("string")
-                                    for j in range(r)
-                                ],
-                            ).alias("key"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("_b"),
-        ).select(f"id_{tag}", "_b.band", "_b.key")
+            F.posexplode(F.array(*keys)).alias("band", "key"),
+        )
+
     cand = (
-        banded(corpus, "a")
-        .join(F.broadcast(banded(bench, "b")), ["band", "key"])
+        banded(feats.filter(~bench_pred), "a")
+        .join(F.broadcast(banded(feats.filter(bench_pred), "b")), ["band", "key"])
         .select("id_a", "id_b")
         .distinct()
     )
     sets = feats.select(F.col(id_col), "_sh", "_n", "_mlo", "_mhi")
-    t10 = int(threshold * 10)
-    sized = (
-        cand.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_sh").alias("_sha"),
-                F.col("_n").alias("_na"),
-                F.col("_mlo").alias("_mloa"),
-                F.col("_mhi").alias("_mhia"),
-            ),
-            "id_a",
-        )
-        .join(
-            F.broadcast(
-                sets.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_sh").alias("_shb"),
-                    F.col("_n").alias("_nb"),
-                    F.col("_mlo").alias("_mlob"),
-                    F.col("_mhi").alias("_mhib"),
-                )
-            ),
-            "id_b",
-        )
-        .filter(
-            F.least("_na", "_nb") * 10 >= F.greatest("_na", "_nb") * t10
-        )
-    )
-    # 128-bit occupancy-mask bound (round 11, exactness-preserving)
-    sized = _mask_bound_filter(sized, threshold)
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    jac = F.round(
-        inter.cast("double") / (F.col("_na") + F.col("_nb") - inter), 6
-    )
     return (
-        sized.select("id_a", "id_b", jac.alias("_j"))
-        .filter(F.col("_j") >= threshold)
+        _jaccard_verify(cand, sets, threshold)
         .groupBy(F.col("id_a").alias(id_col))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bench_matches"),
-            F.max("_j").alias("max_jaccard"),
+            F.max("jaccard").alias("max_jaccard"),
         )
     )

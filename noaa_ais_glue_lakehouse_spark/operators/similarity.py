@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.operators._cache import query_scoped_cache
+from noaa_ais_glue_lakehouse_spark.operators.dedup import band_pairs
 
 
 def _require_pandas() -> None:
@@ -241,8 +242,6 @@ def cosine_near_duplicates(
     threshold: float = 0.4,
     n_planes: int | None = None,
     n_tables: int | None = None,
-    broadcast_matrix_verify: bool = False,
-    auto_geometry: bool | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via multi-table LSH + exact verify.
 
@@ -255,8 +254,7 @@ def cosine_near_duplicates(
     volume — stay ~linear in the corpus instead of a fixed geometry's
     ~n²/2^b (measured decade exponent 1.88 fixed vs 1.01 auto,
     SCALING.md). Passing an explicit ``n_planes``/``n_tables`` pins the
-    geometry (test surfaces, run-to-run comparability); ``auto_geometry``
-    remains as an explicit override in either direction.
+    geometry (test surfaces, run-to-run comparability).
 
     The scale path for embedding dedup: bucket on hyperplane sign bits
     (few planes → big buckets → high recall at moderate thresholds; many
@@ -265,24 +263,8 @@ def cosine_near_duplicates(
     around 0.4 (p≈0.63 → recall ≈ 0.94 with 4×16); tighten n_planes for
     higher thresholds. Precision is exact (verification step); recall vs
     :func:`cosine_pairs_exact` is measured in tests.
-
-    ``broadcast_matrix_verify``: permissive hyperplane LSH at moderate
-    thresholds generates orders of magnitude more candidates than
-    survivors (measured 1.27M → 871 at sf0.1), and the default verify
-    ships BOTH vectors per candidate row through Arrow (~2·dim·4 bytes ×
-    |candidates|). When True, the whole (id, vector) table is collected
-    once, broadcast, and the verify ships only the 16-byte id pair —
-    vectors resolve by binary search inside the UDF; bit-identical
-    output (same float32→float64 widening, same einsum). Only valid in
-    the regime where the embedding table fits in executor memory
-    (≈ ≤10M rows at dim 64) — which is also the regime where a flat
-    self-join LSH is the right tool at all; beyond it, use
-    :func:`cosine_near_duplicates_clustered` (SemDeDup shape) or IVF,
-    whose candidate generation is already centroid-sharded.
     """
-    if auto_geometry is None:
-        auto_geometry = n_planes is None and n_tables is None
-    if auto_geometry:
+    if n_planes is None and n_tables is None:
         n_planes, n_tables = lsh_geometry_for(df.count(), threshold)
     else:
         n_planes = 4 if n_planes is None else n_planes
@@ -303,49 +285,15 @@ def cosine_near_duplicates(
     sigged = query_scoped_cache(
         df.select(F.col(id_col), signatures(F.col(vec_col)).alias("_sigs"))
     )
-    keyed = sigged.select(
-        id_col,
-        "_sigs",
-        F.explode(
-            F.arrays_zip(
-                F.sequence(F.lit(0), F.lit(n_tables - 1)).alias("tbl"),
-                F.col("_sigs").alias("sig"),
-            )
-        ).alias("_k"),
-    )
-    a = keyed.alias("a")
-    b = keyed.alias("b")
+    # one band per table: element_at is a plain codegen expression
+    tables = [F.element_at("_sigs", t + 1) for t in range(n_tables)]
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    # Cross-table dedup without a shuffle: emit a pair only from its FIRST
-    # agreeing table (no earlier table's bucket ids match) — each pair
-    # exactly once, no dropDuplicates over the L-fold join output.
-    # element_at is a plain codegen expression, so the n_tables-1 guard
-    # terms stay inside the join's generated code.
-    cond = (F.col("a._k") == F.col("b._k")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    # explicit numeric repartition: candidate rows are ~16 bytes, so AQE
+    # would byte-coalesce the verify (compute-bound) to a couple of
+    # partitions
+    pairs = band_pairs(sigged, id_col, tables).repartition(
+        parallelism, "id_a", "id_b"
     )
-    for j in range(n_tables - 1):
-        cond = cond & (
-            (F.col("a._k.tbl") <= F.lit(j))
-            | (F.element_at("a._sigs", j + 1) != F.element_at("b._sigs", j + 1))
-        )
-    pairs = (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        # explicit numeric repartition: candidate rows are ~16 bytes, so
-        # AQE would byte-coalesce the verify (compute-bound) to a couple
-        # of partitions
-        .repartition(parallelism, "id_a", "id_b")
-    )
-    if broadcast_matrix_verify:
-        cos = _pair_cosine_by_index_udf(df, id_col, vec_col)
-        return (
-            pairs.select("id_a", "id_b", F.round(cos(F.col("id_a"), F.col("id_b")), 4).alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
     cands = pairs.join(
         df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")),
         "id_a",
@@ -358,41 +306,6 @@ def cosine_near_duplicates(
         cands.select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def _pair_cosine_by_index_udf(df: DataFrame, id_col: str, vec_col: str):
-    """Pairwise cosine where the UDF input is only the (id_a, id_b) pair:
-    the (id, vector) table is collected ONCE in id order, broadcast to
-    executors, and vectors resolve by ``searchsorted`` on the sorted id
-    array. Arithmetic is identical to :func:`_pair_cosine_udf` (float32
-    values widened to float64, einsum dot, norm product), so the output
-    is bit-for-bit the same — only the transport differs: 16 bytes per
-    candidate instead of 2·dim·4. See cosine_near_duplicates for the
-    memory-regime caveat."""
-    _require_pandas()
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    rows = df.select(id_col, vec_col).orderBy(id_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat))
-
-    @pandas_udf("double")
-    def pair_cosine_by_index(ia: pandas.Series, ib: pandas.Series) -> pandas.Series:
-        b_ids, b_mat = bc.value
-        ma = b_mat[np.searchsorted(b_ids, ia.values)]
-        mb = b_mat[np.searchsorted(b_ids, ib.values)]
-        dots = np.einsum("ij,ij->i", ma, mb)
-        norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pandas.Series(dots / norms)
-
-    # asNondeterministic: callers filter on the UDF's output column, and
-    # Catalyst pushes that filter below the projection while ALSO keeping
-    # the projection — evaluating the UDF twice over every candidate
-    # (guide §4.4: two ArrowEvalPython nodes for one call). The function
-    # is pure; the marker only forbids the optimizer from duplicating it.
-    return pair_cosine_by_index.asNondeterministic()
 
 
 def _pair_cosine_udf():
@@ -808,26 +721,26 @@ def portable_hyperplane_signs(
     ]
 
 
-def fold_dot_expr(vec, s_row) -> "F.Column":
-    """Σ_d x_d·s_d as an EXPLICIT left-associated expression chain —
-    bit-identical to the HOF form
-    ``F.aggregate(F.zip_with(vec, s_arr, λx,s: x.cast('double')·s),
-    0.0, λa,x: a+x)`` (same multiply, same left-fold addition order,
-    same NULL propagation).
-
-    MEASURED AND REJECTED as the portable-LSH dot kernel (round 10, do
-    not revisit): replacing the HOF fold with this chain pushed q474
-    5.6 s → 30 s and q384 30 s → 48 s at sf0.1 — the 48 × 64-term trees
-    exceed what codegen will compile, and per-NODE interpreted
-    evaluation (boxing + branch per Add/Multiply/ElementAt) is far
-    slower than the HOF's per-element loop over a primitive array.
-    Kept (unused by the LSH paths) because its equivalence argument
-    documents the float-determinism constraint any future kernel swap
-    must satisfy; the pytest pinning chain == HOF keeps the argument
-    honest."""
-    acc = F.lit(0.0)
-    for d, s in enumerate(s_row):
-        acc = acc + F.element_at(vec, d + 1).cast("double") * F.lit(float(s))
+def portable_bucket_expr(vec, table_signs: list[list[int]]) -> "F.Column":
+    """Bucket id of one portable hyperplane table: bit j is
+    sign(Σ_d s_jd·x_d) ≥ 0 over the ±1 row ``table_signs[j]``
+    (:func:`portable_hyperplane_signs`), the b bits packed into one int.
+    The dot is a row-local ``zip_with`` + left-fold ``aggregate``, so an
+    independent engine adds in the same (IEEE-exact-rounded) order."""
+    acc = F.lit(0)
+    for j, row in enumerate(table_signs):
+        # HOF left fold, NOT an explicit left-associated 64-term chain
+        # (bit-identical): the chain pushed q474 5.6 s → 30 s and q384
+        # 30 s → 48 s at sf0.1 (round 10) — the 48 giant trees exceed
+        # what codegen compiles, and per-NODE interpreted evaluation is
+        # slower than the HOF's per-element loop over a primitive array.
+        s_arr = F.array(*[F.lit(float(s)) for s in row])
+        dot = F.aggregate(
+            F.zip_with(vec, s_arr, lambda x, s: x.cast("double") * s),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        acc = acc + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
     return acc
 
 
@@ -865,72 +778,26 @@ def cosine_near_duplicates_portable(
     """
     signs = portable_hyperplane_signs(n_tables, n_planes, dim)
     vec = F.col(vec_col)
-
-    def bucket_expr(t: int):
-        acc = F.lit(0)
-        for j in range(n_planes):
-            # HOF left fold, NOT an explicit 64-term expression chain:
-            # the chain form was measured 1.6× SLOWER here (round 10) —
-            # the giant tree falls out of codegen and evaluates
-            # interpreted per NODE, worse than the HOF's per-element
-            # loop. See fold_dot_expr's docstring for the measurement.
-            s_arr = F.array(*[F.lit(float(s)) for s in signs[t][j]])
-            dot = F.aggregate(
-                F.zip_with(vec, s_arr, lambda x, s: x.cast("double") * s),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            acc = acc + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return acc
-
     # id + bucket keys ONLY, materialized (round 10, guide §2.4): the
     # banded self-join references this relation twice, so uncached the
     # n_tables·n_planes fold-dots — the dominant per-row cost — ran
     # once per side; the cached index is (id + n_tables ints)/row,
     # MEMORY_AND_DISK / LRU like every LSH signature index here.
+    # Candidate generation is ID-ONLY: carrying the embedding through the
+    # exploded per-table self-join would push candidates × dim × 8 bytes
+    # through the shuffle — the exact cost the non-portable path avoids.
+    # Vectors re-attach at |survivor pairs| via two equi-joins before the
+    # exact verify.
     keyed = query_scoped_cache(
         df.select(
             F.col(id_col),
-            *[bucket_expr(t).alias(f"_bk{t}") for t in range(n_tables)],
+            *[
+                portable_bucket_expr(vec, s).alias(f"_bk{t}")
+                for t, s in enumerate(signs)
+            ],
         )
     )
-    # Candidate generation is ID-ONLY (id + table keys): carrying the
-    # embedding through the exploded per-table self-join would push
-    # candidates × dim × 8 bytes through the shuffle — the exact cost the
-    # non-portable path avoids. Vectors re-attach at |survivor pairs| via
-    # two equi-joins before the exact verify.
-    banded = keyed.select(
-        id_col,
-        *[f"_bk{t}" for t in range(n_tables)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), F.col(f"_bk{t}").alias("bkt")
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("_b"),
-    ).select(
-        id_col, *[f"_bk{t}" for t in range(n_tables)], "_b.tbl", "_b.bkt"
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cond = (
-        (F.col("a.tbl") == F.col("b.tbl"))
-        & (F.col("a.bkt") == F.col("b.bkt"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    )
-    for j in range(n_tables - 1):
-        cond = cond & (
-            (F.col("a.tbl") <= F.lit(j))
-            | (F.col(f"a._bk{j}") != F.col(f"b._bk{j}"))
-        )
-    cand = a.join(b, cond).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    )
+    cand = band_pairs(keyed, id_col, [F.col(f"_bk{t}") for t in range(n_tables)])
     # Per-VECTOR norms computed once here and re-attached with the
     # vectors (round 10, guide §4.1): cosine_similarity recomputes both
     # norms per PAIR, so |candidates| ≫ |corpus| meant two redundant

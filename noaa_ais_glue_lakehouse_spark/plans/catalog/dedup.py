@@ -174,11 +174,8 @@ def q47_cosine_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     via explicit ``n_planes=/n_tables=``. Verify is the default
     join-attach form (vectors re-attach to the candidate pairs via two
     equi-joins): no driver-side collect anywhere on this path, so it
-    survives a corpus that outgrows driver memory. The broadcast-matrix
-    verify (16-byte pair transport) remains available behind
-    ``broadcast_matrix_verify=True`` for corpora known to fit in
-    executor memory; the truly-at-scale variants are the clustered
-    (q64) and IVF (q55) paths."""
+    survives a corpus that outgrows driver memory. The truly-at-scale
+    variants are the clustered (q64) and IVF (q55) paths."""
     from noaa_ais_glue_lakehouse_spark.operators.similarity import (
         cosine_near_duplicates,
     )
@@ -1722,9 +1719,7 @@ def q344_cosine_dup_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    return cosine_near_duplicates(
-        emb, 64, "vec_id", "embedding", threshold=0.5, auto_geometry=True
-    )
+    return cosine_near_duplicates(emb, 64, "vec_id", "embedding", threshold=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -3519,39 +3514,15 @@ def q497_minhash_estimation_error(
     Scale: q27/q383's shape exactly — banded equi-join candidates,
     |candidates|-bounded verify, then a ≤21-row bucket rollup."""
     from noaa_ais_glue_lakehouse_spark.operators.dedup import (
-        MINHASH_PORTABLE_P,
-        _band_pairs,
-        _shingle_expr,
-        _spread,
-        minhash_portable_slot_consts,
+        _minhash_band_keys,
+        _portable_minhash_index,
+        band_pairs,
     )
 
     num_hashes, bands = 32, 8
-    p = MINHASH_PORTABLE_P
     docs = load(spark, sf_dir, "documents")
-    shingle = _shingle_expr("text", False, 0)
-    exploded = (
-        _spread(docs.select(F.col("doc_id"), F.col("text")))
-        .select(F.col("doc_id"), F.explode(shingle).alias("_s"))
-        .select(
-            F.col("doc_id"),
-            F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("_h60"),
-        )
-        .withColumn("_hp", F.col("_h60") % p)
-    )
-    aggs = [
-        F.min((F.col("_hp") * F.lit(a) + F.lit(b)) % p).alias(f"_h{i}")
-        for i, (a, b) in enumerate(minhash_portable_slot_consts(num_hashes))
-    ]
-    aggs.append(F.collect_set(F.col("_h60")).alias("_sh"))
-    feats = query_scoped_cache(
-        exploded.groupBy("doc_id")
-        .agg(*aggs)
-        .withColumn("_n", F.size("_sh"))
-    )
-    cands = _band_pairs(feats, "doc_id", num_hashes, bands)
+    feats = _portable_minhash_index(docs, "doc_id", "text", num_hashes)
+    cands = band_pairs(feats, "doc_id", _minhash_band_keys(num_hashes, bands))
     sig_a = feats.select(
         F.col("doc_id").alias("id_a"),
         F.col("_sh").alias("_sha"),

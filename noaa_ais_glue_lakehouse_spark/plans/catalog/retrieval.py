@@ -3066,26 +3066,19 @@ def q432_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: LSH side is q383's measured-0.23-exponent shape; the exact
     side is the audit's purpose and cost."""
     from noaa_ais_glue_lakehouse_spark.operators.dedup import (
-        _band_pairs,
-        _shingle_expr,
-        MINHASH_PORTABLE_P,
+        _minhash_band_keys,
+        _portable_minhash_index,
+        band_pairs,
         minhash_near_duplicates_portable,
-        minhash_portable_slot_consts,
     )
 
     docs = load(spark, sf_dir, "documents")
-    p = MINHASH_PORTABLE_P
-    sh = (
-        docs.select("doc_id", F.explode(_shingle_expr("text", False, 0)).alias("_s"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h60"),
-        )
-        .distinct()
-    )
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    # the same cached index minhash_near_duplicates_portable builds below:
+    # one md5 shingle pass feeds the ground truth, the candidates and the
+    # verify
+    feats = _portable_minhash_index(docs, "doc_id", "text", 32)
+    sh = feats.select("doc_id", F.explode("_sh").alias("h60"))
+    sz = feats.select("doc_id", F.col("_n").cast("long").alias("n"))
     a = sh.select(F.col("doc_id").alias("id_a"), "h60")
     b = sh.select(F.col("doc_id").alias("id_b"), "h60")
     co = (
@@ -3106,16 +3099,7 @@ def q432_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_a", "id_b")
     )
-    aggs = [
-        F.min((F.col("hp") * F.lit(ca) + F.lit(cb)) % p).alias(f"_h{i}")
-        for i, (ca, cb) in enumerate(minhash_portable_slot_consts(32))
-    ]
-    feats = (
-        sh.withColumn("hp", F.col("h60") % p)
-        .groupBy("doc_id")
-        .agg(*aggs)
-    )
-    cands = _band_pairs(feats, "doc_id", 32, 8)
+    cands = band_pairs(feats, "doc_id", _minhash_band_keys(32, 8))
     verified = minhash_near_duplicates_portable(
         docs, "doc_id", "text", threshold=0.8
     ).select("id_a", "id_b")
@@ -3586,7 +3570,7 @@ def q474_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query side of a serving join is small by construction, so the
     broadcast shape IS the 100 TB plan."""
     from noaa_ais_glue_lakehouse_spark.operators.similarity import (
-        cosine_similarity,
+        portable_bucket_expr,
         portable_hyperplane_signs,
     )
 
@@ -3595,25 +3579,14 @@ def q474_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = portable_hyperplane_signs(n_tables, n_planes, dim)
     vec = F.col("embedding")
 
-    def bucket_expr(t: int):
-        acc = F.lit(0)
-        for j in range(n_planes):
-            s_arr = F.array(*[F.lit(float(s)) for s in signs[t][j]])
-            dot = F.aggregate(
-                F.zip_with(vec, s_arr, lambda x, s: x.cast("double") * s),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            acc = acc + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return acc
-
     stacked = emb.select(
         "vec_id",
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(t).alias("tbl"), bucket_expr(t).alias("bkt")
+                        F.lit(t).alias("tbl"),
+                        portable_bucket_expr(vec, signs[t]).alias("bkt"),
                     )
                     for t in range(n_tables)
                 ]

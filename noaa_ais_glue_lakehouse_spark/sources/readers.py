@@ -122,20 +122,6 @@ def read_parquet_enforced(
         return df.select(*cols)
 
 
-def read_state_snapshot(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """S8 — state-snapshot source with empty-DataFrame fallback when the
-    snapshot dir is absent (first run). Reference: ``utils/state_io.py:14-29``.
-    """
-    try:
-        df = spark.read.schema(schema).parquet(path)
-        df.head(1)
-        return df
-    except Exception:
-        return empty_frame(spark, schema)
-
-
 def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     """A zero-row DataFrame with exactly ``schema`` (nullability included)
     and zero partitions. On a classic session ``createDataFrame([])``

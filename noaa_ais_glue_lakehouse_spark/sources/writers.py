@@ -26,16 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def bounded_count(df: DataFrame, threshold: int) -> int:
-    """O3 — 'are there more than N rows?' without a full count.
-
-    ``limit(n+1).count()`` stops scanning once n+1 rows are found
-    (reference: ``utils/common_functions_raw.py:74-75``). Returns the
-    bounded count — a return of ``threshold + 1`` means "more than".
-    """
-    return df.limit(threshold + 1).count()
-
-
 def _write_staged(
     df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet", **options
 ) -> list[str]:

@@ -14,8 +14,6 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "noaa_ais_glue_lakehouse_spa
 # exact occurrence count). A new collect anywhere — including inside an
 # already-allowlisted file — fails this test until it's reviewed and
 # added here with its bound documented:
-#   - _pair_cosine_by_index_udf: broadcast-matrix build (|corpus|
-#     vectors; opt-in path, caller-bounded memory regime)
 #   - _train_centroids: k-means training sample, .limit(kmeans_sample)
 #     (default 10k rows) precedes the collect
 #   - _bpe_merge_rounds (bpe_merges body): .limit(1) argmax, one row
@@ -34,7 +32,6 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "noaa_ais_glue_lakehouse_spa
 #     arithmetic (_shared._absorb_iterate_start) instead of 30 Spark
 #     jobs of pure scheduler overhead over a few hundred rows.
 ALLOWED_COLLECT_SITES = {
-    ("operators/similarity.py", "_pair_cosine_by_index_udf"): 1,
     ("plans/catalog/events.py", "q423_markov_attribution"): 1,
     ("plans/catalog/events.py", "q430_shapley_attribution"): 1,
     ("sources/writers.py", "write_versioned_wap"): 1,

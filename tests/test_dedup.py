@@ -213,6 +213,44 @@ def test_first_collision_equals_distinct_of_all_band_collisions(spark):
     assert fast == naive and len(naive) > 0
 
 
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_band_pairs_matches_brute_force(spark, aqe):
+    """band_pairs emits every pair agreeing in ANY band exactly once, with
+    id_a < id_b — against a brute-force Python pair set, under AQE on and
+    off. Keys come from a 4-value range, so most pairs collide in several
+    bands and the first-agreeing-band guard does real work."""
+    import random
+
+    from noaa_ais_glue_lakehouse_spark.operators.dedup import band_pairs
+
+    rng = random.Random(7)
+    n_bands = 4
+    ids = rng.sample(range(10_000), 160)
+    keys = {i: [rng.randrange(4) for _ in range(n_bands)] for i in ids}
+    df = spark.createDataFrame(
+        [(i, *k) for i, k in keys.items()],
+        ["doc_id", *[f"b{t}" for t in range(n_bands)]],
+    )
+    truth = {
+        (x, y)
+        for x in ids
+        for y in ids
+        if x < y and any(p == q for p, q in zip(keys[x], keys[y]))
+    }
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        rows = band_pairs(
+            df, "doc_id", [F.col(f"b{t}") for t in range(n_bands)]
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    got = [(r["id_a"], r["id_b"]) for r in rows]
+    assert len(got) == len(set(got))  # each unordered pair exactly once
+    assert all(a < b for a, b in got)
+    assert set(got) == truth and len(truth) > 5000
+
+
 def test_minhash_materialize_index_equivalence(spark):
     """materialize_index=True (localCheckpoint) and False (pure lazy) must
     return identical near-dup pairs."""

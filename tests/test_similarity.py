@@ -189,7 +189,7 @@ def test_auto_geometry_recall_dedup_regime(spark):
     got = {
         (r["id_a"], r["id_b"])
         for r in cosine_near_duplicates(
-            df, DIM, "vec_id", "embedding", threshold=0.85, auto_geometry=True
+            df, DIM, "vec_id", "embedding", threshold=0.85
         ).collect()
     }
     assert len(exact) >= 10  # the fixture actually planted pairs

@@ -95,24 +95,6 @@ def test_cosine_dedup_recall(spark):
     assert recall >= 0.8, f"recall {recall:.3f}"
 
 
-def test_cosine_dedup_broadcast_matrix_verify_identical(spark):
-    """broadcast_matrix_verify=True must be BIT-identical to the attach
-    form — same pairs, same 4dp scores (the transport changes, the
-    float arithmetic doesn't)."""
-    df = _clustered_vectors(spark)
-    attach = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in cosine_near_duplicates(df, dim=16, threshold=0.7).collect()
-    }
-    bmat = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in cosine_near_duplicates(
-            df, dim=16, threshold=0.7, broadcast_matrix_verify=True
-        ).collect()
-    }
-    assert attach == bmat and len(attach) > 0
-
-
 def test_detect_swapped_coordinates(spark):
     ok = spark.createDataFrame([(39.0, -76.0), (40.0, -75.0)], ["LAT", "LON"])
     assert detect_swapped_coordinates(ok) is False

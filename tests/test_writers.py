@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.schemas import STATE_SNAPSHOT_SCHEMA
 from noaa_ais_glue_lakehouse_spark.sources.writers import (
-    bounded_count,
     read_state_snapshot_by_date,
     write_partitioned_parquet,
     write_quarantine,
@@ -83,12 +82,6 @@ def test_state_snapshot_roundtrip_and_fallback(spark, tmp_path):
     empty = read_state_snapshot_by_date(spark, prefix, "1999-01-01", STATE_SNAPSHOT_SCHEMA)
     assert empty.count() == 0
     assert empty.schema == STATE_SNAPSHOT_SCHEMA
-
-
-def test_bounded_count(spark):
-    df = spark.range(1000)
-    assert bounded_count(df, 10) == 11
-    assert bounded_count(df.limit(5), 10) == 5
 
 
 def test_partition_pruning_reaches_scan(spark, tmp_path):

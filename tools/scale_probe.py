@@ -72,7 +72,7 @@ def _extra_probes():
     def auto(spark, d):
         emb = spark.read.parquet(f"{d}/embeddings.parquet")
         return cosine_near_duplicates(
-            emb, 64, "vec_id", "embedding", threshold=0.85, auto_geometry=True
+            emb, 64, "vec_id", "embedding", threshold=0.85
         )
 
     def saturated(spark, d):
